@@ -443,22 +443,6 @@ def simhash_from_hashes(hashed: Column, bits: int = 48) -> Column:
     return acc
 
 
-def simhash(text: Column, bits: int = 48, hash_mode: str = "xxhash64") -> Column:
-    """SimHash signature from token hashes: bit i of the signature is the
-    sign of Σ_tokens (±1 by the token-hash's bit i). Array-side, no UDF.
-
-    bits ≤ 63 (bit 63 would overflow the signed long literal); in 'poly'
-    mode bits ≤ 62 (two 31-bit polynomial hashes concatenated).
-
-    NOTE: this single-Column form inlines the token-hash array into every
-    per-bit aggregate (re-derived ``bits`` times by the interpreted HOF
-    evaluator) — DataFrame-level callers should project ``token_hashes``
-    first and fold with ``simhash_from_hashes`` (simhash_pairs does)."""
-    if hash_mode == "poly" and bits > 62:
-        raise ValueError("poly mode supplies 62 hash bits")
-    return simhash_from_hashes(token_hashes(text, hash_mode), bits)
-
-
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -692,14 +676,14 @@ def embedding_neardup_pairs(
     from bicis_spark.extensions.similarity import cosine_from_norms, norm_col
 
     q = _partitioned(df, None).select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col), dims).alias("qv")
-    ).withColumn("n", norm_col(F.col("qv"), dims))
+        F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv")
+    ).withColumn("n", norm_col(F.col("qv")))
     a, b = q.alias("a"), q.alias("b")
     if probe_mod is not None:
         a = a.where(F.col("vid") % probe_mod == 0)
     pairs = a.join(b, F.col("a.vid") < F.col("b.vid"))
     sim = cosine_from_norms(
-        F.col("a.qv"), F.col("b.qv"), F.col("a.n"), F.col("b.n"), dims
+        F.col("a.qv"), F.col("b.qv"), F.col("a.n"), F.col("b.n")
     )
     return (
         pairs.select(
@@ -785,8 +769,7 @@ def embedding_neardup_pairs_lsh(
         )
     if regime == "kmeans":
         assigned = _kmeans_assigned(
-            df, id_col, vec_col, kmeans_mod, kmeans_iters, dims,
-            kmeans_max_clusters,
+            df, id_col, vec_col, kmeans_mod, kmeans_iters, kmeans_max_clusters,
         )
         ka = assigned.select(
             F.col("vid").alias("vec_a"),
@@ -801,7 +784,7 @@ def embedding_neardup_pairs_lsh(
             F.col("n").alias("n_b"),
         )
         ksim = cosine_from_norms(
-            F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b"), dims
+            F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
         )
         return (
             ka.join(
@@ -815,8 +798,8 @@ def embedding_neardup_pairs_lsh(
 
     q = _reusable(
         _partitioned(df, None)
-        .select(F.col(id_col).alias("vid"), quantize(F.col(vec_col), dims).alias("qv"))
-        .withColumn("n", norm_col(F.col("qv"), dims)),
+        .select(F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv"))
+        .withColumn("n", norm_col(F.col("qv"))),
         None,
         "vid",
     )
@@ -851,7 +834,7 @@ def embedding_neardup_pairs_lsh(
         F.col("vid").alias("vec_b"), F.col("qv").alias("qv_b"), F.col("n").alias("n_b")
     )
     sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b"), dims
+        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
     )
     return (
         cand.join(qa, "vec_a")
@@ -931,8 +914,8 @@ def embedding_lsh_band_profile(
 
     q = _reusable(
         _partitioned(df, None)
-        .select(F.col(id_col).alias("vid"), quantize(F.col(vec_col), dims).alias("qv"))
-        .withColumn("n", norm_col(F.col("qv"), dims)),
+        .select(F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv"))
+        .withColumn("n", norm_col(F.col("qv"))),
         None,
         "vid",
     )
@@ -970,7 +953,7 @@ def embedding_lsh_band_profile(
         F.col("vid").alias("vec_b"), F.col("qv").alias("qv_b"), F.col("n").alias("n_b")
     )
     sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b"), dims
+        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
     )
     return (
         cand.join(qa, "vec_a")
@@ -994,7 +977,6 @@ def _kmeans_assigned(
     vec_col: str,
     n_centroids_mod: int,
     train_iters: int,
-    dims: int | None,
     max_clusters: int | None,
 ) -> DataFrame:
     """Deterministic k-means clustering of a quantized embedding corpus:
@@ -1015,7 +997,7 @@ def _kmeans_assigned(
 
     c = tracked_persist(
         _partitioned(df, None).select(
-            F.col(id_col).alias("vid"), quantize(F.col(vec_col), dims).alias("qv")
+            F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv")
         )
     )
     seed_filter = F.col("vid") % n_centroids_mod == 1
@@ -1030,11 +1012,11 @@ def _kmeans_assigned(
     # ann_topk_ivf: c feeds every training iteration plus the assignment
     seeds = c.where(seed_filter).select(F.col("vid").alias("centroid_id"), "qv")
     cents = tracked_persist(
-        kmeans_refine_exact(c, seeds, train_iters, "vid", "qv", dims)
+        kmeans_refine_exact(c, seeds, train_iters, "vid", "qv")
     )
     return _reusable(
-        ivf_assign(c, cents, "vid", "qv", dims).withColumn(
-            "n", norm_col(F.col("qv"), dims)
+        ivf_assign(c, cents, "vid", "qv").withColumn(
+            "n", norm_col(F.col("qv"))
         ),
         None,
         "vid",
@@ -1087,7 +1069,7 @@ def semantic_dedup(
     from bicis_spark.extensions.similarity import cosine_from_norms
 
     assigned = _kmeans_assigned(
-        df, id_col, vec_col, n_centroids_mod, train_iters, dims, max_clusters
+        df, id_col, vec_col, n_centroids_mod, train_iters, max_clusters
     )
     a = assigned.select(
         F.col("vid").alias("va"),
@@ -1102,7 +1084,7 @@ def semantic_dedup(
         F.col("n").alias("n_b"),
     )
     sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b"), dims
+        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
     )
     dups = (
         a.join(b, (F.col("ca") == F.col("cb")) & (F.col("va") < F.col("vb")))
@@ -1153,7 +1135,6 @@ def incremental_dedup(
 def _grouped_assign(
     members: DataFrame,
     cents: DataFrame,
-    dims: int | None,
 ) -> DataFrame:
     """Assign each (vid, qv, super_id) member to its max-cosine centroid
     WITHIN its super cluster (centroid table [super_id, sub_id, cqv],
@@ -1162,11 +1143,11 @@ def _grouped_assign(
     combinable), mirroring similarity.ivf_assign."""
     from bicis_spark.extensions.similarity import cosine_from_norms, norm_col
 
-    m = members.withColumn("_mn", norm_col(F.col("qv"), dims))
+    m = members.withColumn("_mn", norm_col(F.col("qv")))
     c = cents.select(
         "super_id", "sub_id", F.col("cqv").alias("_cv")
-    ).withColumn("_cn", norm_col(F.col("_cv"), dims))
-    sim = cosine_from_norms(F.col("qv"), F.col("_cv"), F.col("_mn"), F.col("_cn"), dims)
+    ).withColumn("_cn", norm_col(F.col("_cv")))
+    sim = cosine_from_norms(F.col("qv"), F.col("_cv"), F.col("_mn"), F.col("_cn"))
     pairs = m.join(F.broadcast(c), "super_id").withColumn("_sim", sim)
     return (
         pairs.groupBy("vid")
@@ -1217,16 +1198,16 @@ def semantic_dedup_two_level(
 
     c = tracked_persist(
         _partitioned(df, None).select(
-            F.col(id_col).alias("vid"), quantize(F.col(vec_col), dims).alias("qv")
+            F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv")
         )
     )
     sfilter = F.col("vid") % super_mod == 1
     if max_super is not None:
         sfilter = sfilter & (F.col("vid") < super_mod * max_super)
     sseeds = c.where(sfilter).select(F.col("vid").alias("centroid_id"), "qv")
-    scents = kmeans_refine_exact(c, sseeds, train_iters, "vid", "qv", dims)
+    scents = kmeans_refine_exact(c, sseeds, train_iters, "vid", "qv")
     sup = tracked_persist(
-        ivf_assign(c, scents, "vid", "qv", dims).withColumnRenamed(
+        ivf_assign(c, scents, "vid", "qv").withColumnRenamed(
             "centroid_id", "super_id"
         )
     )
@@ -1241,7 +1222,7 @@ def semantic_dedup_two_level(
         .select("super_id", F.col("vid").alias("sub_id"), F.col("qv").alias("cqv"))
     )
     for _ in range(train_iters):
-        asg = _grouped_assign(sup, cents2, dims)
+        asg = _grouped_assign(sup, cents2)
         means = (
             asg.select("super_id", "sub_id", F.posexplode("qv"))
             .groupBy("super_id", "sub_id", "pos")
@@ -1266,8 +1247,8 @@ def semantic_dedup_two_level(
             F.coalesce(F.col("_new"), F.col("cqv")).alias("cqv"),
         )
 
-    asg = _grouped_assign(sup, cents2, dims).withColumn(
-        "n", norm_col(F.col("qv"), dims)
+    asg = _grouped_assign(sup, cents2).withColumn(
+        "n", norm_col(F.col("qv"))
     )
     a = asg.select(
         F.col("vid").alias("va"), F.col("super_id").alias("sa"),
@@ -1278,7 +1259,7 @@ def semantic_dedup_two_level(
         F.col("sub_id").alias("cb"), F.col("qv").alias("qv_b"), F.col("n").alias("n_b"),
     )
     sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b"), dims
+        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
     )
     dups = (
         a.join(

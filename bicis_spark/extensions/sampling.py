@@ -186,14 +186,14 @@ def cluster_balanced_sample(
     )
 
     c = _partitioned(df, None).select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col), dims).alias("qv")
+        F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv")
     )
     seed_filter = F.col("vid") % n_centroids_mod == 1
     if max_clusters is not None:
         seed_filter = seed_filter & (F.col("vid") < n_centroids_mod * max_clusters)
     seeds = c.where(seed_filter).select(F.col("vid").alias("centroid_id"), "qv")
-    cents = kmeans_refine_exact(c, seeds, train_iters, "vid", "qv", dims)
-    assigned = ivf_assign(c, cents, "vid", "qv", dims).select("vid", "centroid_id")
+    cents = kmeans_refine_exact(c, seeds, train_iters, "vid", "qv")
+    assigned = ivf_assign(c, cents, "vid", "qv").select("vid", "centroid_id")
     w = Window.partitionBy("centroid_id").orderBy(
         F.md5(F.col("vid").cast("string")), F.col("vid")
     )

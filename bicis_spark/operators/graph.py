@@ -349,30 +349,6 @@ def _edge_triangle_commons(eo: DataFrame) -> DataFrame:
     )
 
 
-def _oriented_triangles(eo: DataFrame) -> DataFrame:
-    """All triangles of a degree-oriented edge set, once each, as
-    [x, y, z] (x the lowest-rank corner): wedges u→v₁, u→v₂ with
-    rank(v₁) < rank(v₂), closed by the oriented edge v₁→v₂."""
-    return (
-        eo.alias("e1")
-        .join(
-            eo.alias("e2"),
-            (F.col("e1.u") == F.col("e2.u"))
-            & (F.col("e1.rv") < F.col("e2.rv")),
-        )
-        .select(
-            F.col("e1.u").alias("x"),
-            F.col("e1.v").alias("y"),
-            F.col("e2.v").alias("z"),
-        )
-        .join(
-            eo.alias("e3"),
-            (F.col("y") == F.col("e3.u")) & (F.col("z") == F.col("e3.v")),
-        )
-        .select("x", "y", "z")
-    )
-
-
 def triangle_count(
     edges: DataFrame, src: str, dst: str, broadcast_degrees: bool | str = False
 ) -> DataFrame:

@@ -146,7 +146,7 @@ def _sqrt_build_search_split(spark, sf_dir: str) -> dict[str, float]:
         t0 = time.perf_counter()
         c, cents, cb, codes = _ivfpq_build(
             emb, 50, None, 1, _PQ_SUBS, _PQ_DIMS, _PQ_MOD, _PQ_ITERS,
-            _PQ_K, "vec_id", "embedding", None,
+            _PQ_K, "vec_id", "embedding",
             n_lists=n_lists, persist_codes=True, train_sample=train_sample,
         )
         codes.count()  # materialize the persisted index
@@ -154,7 +154,7 @@ def _sqrt_build_search_split(spark, sf_dir: str) -> dict[str, float]:
         t0 = time.perf_counter()
         _ivfpq_search(
             c, cents, cb, codes, queries, 5, n_probe, _PQ_SUBS, _PQ_DIMS,
-            _PQ_RERANK, "vec_id", "embedding", None,
+            _PQ_RERANK, "vec_id", "embedding",
         ).write.format("noop").mode("overwrite").save()
         best_s = min(best_s, time.perf_counter() - t0)
         release_tracked()

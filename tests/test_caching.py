@@ -85,7 +85,7 @@ def test_ann_builders_register_their_caches(spark):
         " AS embedding",
     )
     out = ann_topk_ivf(
-        corpus, corpus.limit(5), k=3, n_centroids_mod=10, dims=8, max_lists=4
+        corpus, corpus.limit(5), k=3, n_centroids_mod=10, max_lists=4
     )
     assert tracked_count() >= 2  # corpus projection + centroids
     assert out.count() > 0

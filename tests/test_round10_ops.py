@@ -59,7 +59,7 @@ def test_seed_cap_boundary_is_live(spark):
         ),
     )
     c, cents, cb, codes = _ivfpq_build(
-        ids, 50, 40, 0, 2, 2, 4, 0, 256, "vec_id", "embedding", None
+        ids, 50, 40, 0, 2, 2, 4, 0, 256, "vec_id", "embedding"
     )
     seed_ids = sorted(r["centroid_id"] for r in cents.select("centroid_id").collect())
     assert seed_ids == list(range(1, 1952, 50))  # 40 seeds, 1951 included
@@ -130,7 +130,12 @@ def test_sqrt_sizing_matches_oracle_scalars(spark):
 
 
 def test_ivfpq_probe_curve_monotone_and_accurate(spark, sf_dir):
-    from bicis_spark.plans.extension_queries import ann_ivfpq_probe_curve_q
+    from bicis_spark.plans.extension_queries import (
+        _clustered_corpus,
+        _sqrt_sizing,
+        ann_ivfpq_probe_curve_q,
+        ann_ivfpq_sqrt_recall_q,
+    )
 
     rows = {
         r["probe_lists"]: r["avg_recall"]
@@ -143,6 +148,12 @@ def test_ivfpq_probe_curve_monotone_and_accurate(spark, sf_dir):
     # the declared operating point (middle divisor = _SQRT_PROBE_DIV)
     # clears the r9 verdict's bar
     assert vals[len(vals) // 2] >= 0.8
+    # the curve's (setting, query)-keyed shortlist and re-rank reproduce
+    # the single-setting ann_topk_ivfpq search at the same √N/8 probe
+    # count, which ann_ivfpq_sqrt_recall scores per query
+    n_probe = _sqrt_sizing(_clustered_corpus(spark, sf_dir))[1]
+    rec = ann_ivfpq_sqrt_recall_q(spark, sf_dir).collect()
+    assert rec and rows[n_probe] == sum(r["n_hits"] for r in rec) / (5 * len(rec))
 
 
 def test_ivfpq_n_lists_equals_full_probe_flat(spark, sf_dir):

@@ -149,7 +149,7 @@ def test_ivf_and_semdedup_seed_caps_bound_list_count(spark):
     below = df.where(F.col("vec_id") < 30)  # all ids under the cap boundary
     q_below = below.where(F.col("vec_id") % 7 == 0)
     a = ann_topk_ivf(
-        below, q_below, k=3, n_centroids_mod=10, n_probe=2, train_iters=1, dims=None
+        below, q_below, k=3, n_centroids_mod=10, n_probe=2, train_iters=1
     ).collect()
     b = ann_topk_ivf(
         below,
@@ -158,14 +158,13 @@ def test_ivf_and_semdedup_seed_caps_bound_list_count(spark):
         n_centroids_mod=10,
         n_probe=2,
         train_iters=1,
-        dims=None,
         max_lists=3,
     ).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     # and capped IVF still returns k results per query on the full corpus
     full = ann_topk_ivf(
         df, queries, k=3, n_centroids_mod=10, n_probe=2, train_iters=1,
-        dims=None, max_lists=3,
+        max_lists=3,
     )
     per_q = {r["query_id"]: r["n"] for r in
              full.groupBy("query_id").agg(F.count("*").alias("n")).collect()}
@@ -175,17 +174,18 @@ def test_ivf_and_semdedup_seed_caps_bound_list_count(spark):
 def test_pq_rerank_recovers_exact_topk(spark):
     from bicis_spark.extensions.similarity import ann_topk_bruteforce, ann_topk_pq
 
-    # 40 deterministic 8-dim vectors; with rerank covering the whole
-    # corpus the PQ path must return EXACTLY the brute-force top-k
+    # 40 deterministic 64-dim vectors (the declared PQ width); with rerank
+    # covering the whole corpus the PQ path must return EXACTLY the
+    # brute-force top-k
     rows = [
-        (i, [float(((i * 7 + d * 13) % 19) - 9) for d in range(8)])
+        (i, [float(((i * 7 + d * 13) % 19) - 9) for d in range(64)])
         for i in range(40)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = df.where(F.col("vec_id") % 20 == 0)
     exact = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in ann_topk_bruteforce(df, queries, k=3, dims=None).collect()
+        for r in ann_topk_bruteforce(df, queries, k=3).collect()
     }
     pq = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
@@ -193,7 +193,7 @@ def test_pq_rerank_recovers_exact_topk(spark):
             df,
             queries,
             k=3,
-            n_subspaces=2,
+            n_subspaces=16,
             sub_dims=4,
             seed_mod=4,
             train_iters=1,
@@ -201,6 +201,33 @@ def test_pq_rerank_recovers_exact_topk(spark):
         ).collect()
     }
     assert pq == exact
+
+
+def test_pq_split_must_cover_vector_width(spark):
+    """n_subspaces * sub_dims must equal the 64-dim width: a 16×5 split
+    reads past the vector's end, where the unrolled sub-vector distance
+    fails mid-plan (or, without ANSI mode, turns NULL and silently wins
+    the code assignment). All three PQ entry points reject it up front."""
+    import pytest
+
+    from bicis_spark.extensions.similarity import (
+        ann_ivfpq_probe_curve,
+        ann_topk_ivfpq,
+        ann_topk_pq,
+    )
+
+    df = spark.range(0, 8).select(
+        F.col("id").alias("vec_id"),
+        F.array_repeat(F.lit(1.0), 64).alias("embedding"),
+    )
+    kw = dict(n_subspaces=16, sub_dims=5, n_queries=8)
+    for call in (
+        lambda: ann_topk_pq(df, df, **kw),
+        lambda: ann_topk_ivfpq(df, df, **kw),
+        lambda: ann_ivfpq_probe_curve(df, df, [1], **kw),
+    ):
+        with pytest.raises(ValueError, match="n_subspaces"):
+            call()
 
 
 def test_overwrite_partitions_dynamic_touches_only_written_days(spark, tmp_path):
