@@ -228,7 +228,8 @@ def _ivf_train(
     quadratically. ``train_sample`` bounds the Lloyd training set to the
     first ids (FAISS's max_points_per_centroid discipline): training
     drops from iters·N·n_lists to iters·sample·n_lists, and the full
-    corpus is still assigned once."""
+    corpus is still assigned once. Seeds are filtered from the persisted
+    ``c`` (the same rows as the raw corpus, without a second scan)."""
     seed = (
         F.col(nid) < F.lit(int(n_lists))
         if n_lists is not None
