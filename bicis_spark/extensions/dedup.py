@@ -657,7 +657,6 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    dims: int | None = 64,
     probe_mod: int | None = None,
 ) -> DataFrame:
     """All-pairs cosine near-dup on quantized embeddings (exact integer dot
@@ -1030,7 +1029,6 @@ def semantic_dedup(
     threshold: float = 0.45,
     n_centroids_mod: int = 50,
     train_iters: int = 1,
-    dims: int | None = 64,
     max_clusters: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1171,7 +1169,6 @@ def semantic_dedup_two_level(
     sub_mod: int = 25,
     max_sub_per_super: int = 5,
     train_iters: int = 1,
-    dims: int | None = 64,
 ) -> DataFrame:
     """The 100 TB SemDeDup shape promised by ``semantic_dedup``'s
     docstring, made real: a SUPER k-means routes the corpus into coarse

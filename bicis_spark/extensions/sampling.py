@@ -151,7 +151,6 @@ def cluster_balanced_sample(
     vec_col: str = "embedding",
     n_centroids_mod: int = 50,
     train_iters: int = 1,
-    dims: int | None = 64,
     max_clusters: int | None = None,
     target_per_cluster: int = 10,
 ):

@@ -180,7 +180,11 @@ def _with_norm(df: DataFrame, vec: str, name: str) -> DataFrame:
 
 
 def _corpus_frame(
-    corpus: DataFrame, id_col: str, vec_col: str, nid: str = "nid", qv: str = "qv"
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    nid: str = "nid",
+    qv: str = "qv",
 ) -> DataFrame:
     """Corpus stage [nid, qv]: the scan spread over every core, each vector
     quantized once. Callers that read it from several stages persist it
@@ -193,12 +197,18 @@ def _corpus_frame(
 
 
 def _query_frame(
-    queries: DataFrame, id_col: str, vec_col: str, qv: str = "qv", qn: str | None = "qn"
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    qv: str = "qv",
+    qn: str | None = "qn",
 ) -> DataFrame:
     """Query stage [query_id, qv, qn]: one frame whose norm is shared by
     probe routing, scoring and the exact re-rank. ``qn=None`` leaves the
     norm off (LSH derives it after its probe fan-out)."""
-    q = queries.selectExpr(f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS {qv}")
+    q = queries.selectExpr(
+        f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS {qv}"
+    )
     return q if qn is None else _with_norm(q, qv, qn)
 
 
@@ -214,8 +224,13 @@ def _seed_filter(nid: str, mod: int, cap: int | None) -> Column:
 
 
 def _ivf_train(
-    c: DataFrame, nid: str, n_centroids_mod: int, max_lists: int | None,
-    train_iters: int, n_lists: int | None = None, train_sample: int | None = None,
+    c: DataFrame,
+    nid: str,
+    n_centroids_mod: int,
+    max_lists: int | None,
+    train_iters: int,
+    n_lists: int | None = None,
+    train_sample: int | None = None,
 ) -> DataFrame:
     """IVF trainer over a quantized corpus [nid, qv] → persisted
     [centroid_id, qv]: corpus assignment and probe routing both broadcast
@@ -236,8 +251,12 @@ def _ivf_train(
         else _seed_filter(nid, n_centroids_mod, max_lists)
     )
     seeds = c.where(seed).select(F.col(nid).alias("centroid_id"), "qv")
-    train = c if train_sample is None else c.where(F.col(nid) < F.lit(int(train_sample)))
-    return tracked_persist(kmeans_refine_exact(train, seeds, train_iters, nid, "qv"))
+    train = (
+        c if train_sample is None else c.where(F.col(nid) < F.lit(int(train_sample)))
+    )
+    return tracked_persist(
+        kmeans_refine_exact(train, seeds, train_iters, nid, "qv")
+    )
 
 
 def _probe_routes(q: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
@@ -249,11 +268,17 @@ def _probe_routes(q: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
             cents.selectExpr("centroid_id", "qv AS _cv", f"{_norm_sql('qv')} AS _cn")
         )
     ).selectExpr("*", f"{_cfn_sql('qv', '_cv', 'qn', '_cn')} AS _sim")
-    w = Window.partitionBy("query_id").orderBy(F.col("_sim").desc(), F.col("centroid_id"))
-    return pairs.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= n_probe)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("_sim").desc(), F.col("centroid_id")
+    )
+    return pairs.withColumn("_rn", F.row_number().over(w)).where(
+        F.col("_rn") <= n_probe
+    )
 
 
-def _scan(c: DataFrame, q: DataFrame, score: str, nid: str = "neighbor_id") -> DataFrame:
+def _scan(
+    c: DataFrame, q: DataFrame, score: str, nid: str = "neighbor_id"
+) -> DataFrame:
     """Brute-force scoring: corpus × broadcast(query batch) minus
     self-matches → [query_id, neighbor_id, <score>]. Each executor scans
     its corpus slice once; the corpus never shuffles."""
@@ -268,8 +293,12 @@ def _exact_topk(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
 
 
 def _topk_per_query(
-    scored: DataFrame, order_col: str, k: int, rank_col: str | None = "rank",
-    descending: bool = True, keys: tuple[str, ...] = ("query_id",),
+    scored: DataFrame,
+    order_col: str,
+    k: int,
+    rank_col: str | None = "rank",
+    descending: bool = True,
+    keys: tuple[str, ...] = ("query_id",),
 ) -> DataFrame:
     """Per-query top-k over an UNBOUNDED candidate frame via the salted
     two-phase hash aggregation (``operators.topk.topk_by_group_agg``): a
@@ -285,20 +314,33 @@ def _topk_per_query(
     from bicis_spark.operators.topk import topk_by_group_agg
 
     out = topk_by_group_agg(
-        scored, list(keys), order_col, "neighbor_id", k, ["neighbor_id"],
+        scored,
+        list(keys),
+        order_col,
+        "neighbor_id",
+        k,
+        ["neighbor_id"],
         descending=descending,
     )
     if rank_col is None:
         return out.select(*keys, "neighbor_id")
     return out.select(
-        *keys, "neighbor_id", order_col,
+        *keys,
+        "neighbor_id",
+        order_col,
         F.col("rank_in_group").cast("long").alias(rank_col),
     )
 
 
 def _exact_rerank(
-    scored: DataFrame, order_col: str, rerank: int, q: DataFrame, c: DataFrame,
-    k: int, keys: tuple[str, ...] = ("query_id",), bq=F.broadcast,
+    scored: DataFrame,
+    order_col: str,
+    rerank: int,
+    q: DataFrame,
+    c: DataFrame,
+    k: int,
+    keys: tuple[str, ...] = ("query_id",),
+    bq=F.broadcast,
     descending: bool = True,
 ) -> DataFrame:
     """Exact re-rank: keep each group's top-``rerank`` candidates by the
@@ -309,15 +351,21 @@ def _exact_rerank(
     short = _topk_per_query(
         scored, order_col, rerank, rank_col=None, descending=descending, keys=keys
     )
-    nv = c.selectExpr("nid AS neighbor_id", "qv AS _nv", f"{_norm_sql('qv')} AS _nn")
+    nv = c.selectExpr(
+        "nid AS neighbor_id", "qv AS _nv", f"{_norm_sql('qv')} AS _nn"
+    )
     exact = short.join(bq(q), "query_id").join(nv, "neighbor_id").selectExpr(
         *keys, "neighbor_id", f"{_cfn_sql('qv', '_nv', 'qn', '_nn')} AS cosine"
     )
-    w = Window.partitionBy(*keys).orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    w = Window.partitionBy(*keys).orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
     return (
         exact.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(*keys, "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank"))
+        .select(
+            *keys, "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank")
+        )
     )
 
 
@@ -331,7 +379,9 @@ def ann_topk_bruteforce(
     """Exact top-k cosine neighbors: [query_id, neighbor_id, cosine, rank].
     Self-matches excluded; ties break on neighbor_id; norms computed once
     per vector. The O(Q·N) baseline and the right answer for small Q."""
-    c = _with_norm(_corpus_frame(corpus, id_col, vec_col, "neighbor_id", "cv"), "cv", "cn")
+    c = _with_norm(
+        _corpus_frame(corpus, id_col, vec_col, "neighbor_id", "cv"), "cv", "cn"
+    )
     return _exact_topk(c, _query_frame(queries, id_col, vec_col), k)
 
 
@@ -420,7 +470,9 @@ def ivf_assign(
                 f"struct(_sim, -centroid_id AS _nc))"
             ).alias("_best")
         )
-        .selectExpr(id_col, f"_best._qv AS {qv_col}", "_best.centroid_id AS centroid_id")
+        .selectExpr(
+            id_col, f"_best._qv AS {qv_col}", "_best.centroid_id AS centroid_id"
+        )
     )
 
 
@@ -514,10 +566,14 @@ def ann_topk_ivf(
     c = tracked_persist(_corpus_frame(corpus, id_col, vec_col, "neighbor_id"))
     cents = _ivf_train(c, "neighbor_id", n_centroids_mod, max_lists, train_iters)
     c_assigned = _with_norm(
-        ivf_assign(c, cents, "neighbor_id", "qv").withColumnRenamed("qv", "cv"), "cv", "cn"
+        ivf_assign(c, cents, "neighbor_id", "qv").withColumnRenamed("qv", "cv"),
+        "cv",
+        "cn",
     )
     q = _query_frame(queries, id_col, vec_col)
-    probes = _probe_routes(q, cents, n_probe).select("query_id", "qv", "qn", "centroid_id")
+    probes = _probe_routes(q, cents, n_probe).select(
+        "query_id", "qv", "qn", "centroid_id"
+    )
     cand = c_assigned.join(F.broadcast(probes), "centroid_id").where(
         "neighbor_id != query_id"
     )
@@ -571,7 +627,10 @@ def ann_topk_lsh(
     c = _corpus_frame(corpus, id_col, vec_col, "neighbor_id", "cv")
     q = _query_frame(queries, id_col, vec_col, qn=None)
     c = c.selectExpr("*", tables("cv", "bucket")).selectExpr(
-        "neighbor_id", "cv", "_tb.tbl AS tbl", "_tb.bucket AS bucket",
+        "neighbor_id",
+        "cv",
+        "_tb.tbl AS tbl",
+        "_tb.bucket AS bucket",
         f"{_norm_sql('cv')} AS cn",
     )
     flips = [
@@ -590,11 +649,15 @@ def ann_topk_lsh(
             "query_id", "qv", "_tb.tbl AS tbl", "bucket", f"{_norm_sql('qv')} AS qn"
         )
     )
-    pairs = c.join(F.broadcast(q), ["tbl", "bucket"]).where("neighbor_id != query_id")
+    pairs = c.join(F.broadcast(q), ["tbl", "bucket"]).where(
+        "neighbor_id != query_id"
+    )
     if n_tables > 1:
         # a pair can match in several tables — dedup before the exact
         # re-rank so each candidate is scored once
-        pairs = pairs.select("query_id", "neighbor_id", "qv", "cv", "qn", "cn").distinct()
+        pairs = pairs.select(
+            "query_id", "neighbor_id", "qv", "cv", "qn", "cn"
+        ).distinct()
     scored = pairs.selectExpr("query_id", "neighbor_id", f"{_COS} AS cosine")
     return _topk_per_query(scored, "cosine", k)
 
@@ -609,7 +672,9 @@ def _sub_l2_sql(a: str, b: str, dims: int | None = None) -> str:
     it) while the HOF form zips against NULL padding and returns NULL. A
     NULL distance sorts FIRST in ``min(struct(_d, cid))`` and silently
     picks that code, so the PQ entry points reject any split that does
-    not cover the vector width exactly (``_check_pq_width``)."""
+    not cover the declared width exactly (``_check_pq_width``). That
+    guard reads the parameters only, not the data: a corpus narrower
+    than the declared width still reaches this NULL path."""
     if dims is not None and 1 <= dims <= UNROLL_MAX_DIMS:
         return (
             "CAST("
@@ -626,6 +691,9 @@ def _sub_l2_sql(a: str, b: str, dims: int | None = None) -> str:
 
 
 def _check_pq_width(n_subspaces: int, sub_dims: int, dims: int) -> None:
+    """Reject a PQ split that does not cover the DECLARED width ``dims``.
+    Parameters only: the vectors' own width is not inspected, so callers
+    must pass a corpus exactly ``dims`` wide."""
     if n_subspaces * sub_dims != dims:
         raise ValueError(
             f"n_subspaces * sub_dims = {n_subspaces} * {sub_dims} must equal "
@@ -702,8 +770,12 @@ def pq_encode(
 
 
 def _pq_codec(
-    c: DataFrame, n_subspaces: int, sub_dims: int, seed_mod: int,
-    train_iters: int, max_codes: int | None,
+    c: DataFrame,
+    n_subspaces: int,
+    sub_dims: int,
+    seed_mod: int,
+    train_iters: int,
+    max_codes: int | None,
 ) -> tuple[DataFrame, DataFrame]:
     """PQ codec over a quantized corpus [nid, qv] → (codebooks [sub, cid,
     sv], codes [nid, sub, code]). The codebook size must be a CONSTANT:
@@ -712,15 +784,27 @@ def _pq_codec(
     would make K scale with N, so ``max_codes`` caps the seed set."""
     subvecs = tracked_persist(pq_subvectors(c, "nid", "qv", n_subspaces, sub_dims))
     seeds = pq_subvectors(
-        c.where(_seed_filter("nid", seed_mod, max_codes)), "nid", "qv", n_subspaces, sub_dims
+        c.where(_seed_filter("nid", seed_mod, max_codes)),
+        "nid",
+        "qv",
+        n_subspaces,
+        sub_dims,
     ).select("sub", F.col("nid").alias("cid"), "sv")
-    cb = tracked_persist(pq_train_codebooks(subvecs, seeds, train_iters, "nid", sub_dims))
+    cb = tracked_persist(
+        pq_train_codebooks(subvecs, seeds, train_iters, "nid", sub_dims)
+    )
     return cb, pq_encode(subvecs, cb, "nid", sub_dims)
 
 
 def _adc_scan(
-    q: DataFrame, cb: DataFrame, codes: DataFrame, n_subspaces: int,
-    sub_dims: int, bq, probes: DataFrame | None = None,
+    q: DataFrame,
+    cb: DataFrame,
+    codes: DataFrame,
+    n_subspaces: int,
+    sub_dims: int,
+    bq,
+    probes: DataFrame | None = None,
+    probe_rank: bool = False,
 ) -> DataFrame:
     """LUT/ADC scan → [query_id, neighbor_id, approx_cosine]. Each query
     [query_id, qv, qn] builds a (sub, code) → partial-dot lookup table
@@ -729,9 +813,10 @@ def _adc_scan(
     row per (query, neighbor) before any exchange.
 
     ``probes`` [query_id, centroid_id] restricts the scan to each query's
-    probed lists (codes carry their centroid_id). A probe rank ``_rn``
-    there rides along as ``_minrn``: every candidate lives in one list,
-    so the rank is constant per (query, neighbor)."""
+    probed lists (codes carry their centroid_id). ``probe_rank`` carries
+    the probes' rank column ``_rn`` into the output as ``_minrn``: every
+    candidate lives in one list, so the rank is constant per (query,
+    neighbor)."""
     lut = pq_subvectors(q, "query_id", "qv", n_subspaces, sub_dims).join(
         F.broadcast(cb.selectExpr("sub", "cid", "sv AS _cv")), "sub"
     ).selectExpr(
@@ -748,16 +833,17 @@ def _adc_scan(
     ]
     if probes is not None:
         codes, keys = codes.join(bq(probes), "centroid_id"), ["query_id", *keys]
-        if "_rn" in probes.columns:
-            aggs.append(F.min("_rn").alias("_minrn"))
-            carry = ["_minrn"]
+    if probe_rank:
+        aggs.append(F.min("_rn").alias("_minrn"))
+        carry = ["_minrn"]
     acc = (
         codes.join(bq(lut), keys)
         .where("nid != query_id")
         .groupBy("query_id", "nid")
         .agg(*aggs)
     )
-    return acc.join(bq(q.selectExpr("query_id", "qn AS _qn")), "query_id").selectExpr(
+    qn = bq(q.selectExpr("query_id", "qn AS _qn"))
+    return acc.join(qn, "query_id").selectExpr(
         "query_id",
         "nid AS neighbor_id",
         *carry,
@@ -789,7 +875,8 @@ def ann_topk_pq(
     x̂ the code reconstruction, all numerators exact int64. The top-
     ``rerank`` shortlist is re-scored with EXACT cosine.
     ``n_subspaces · sub_dims`` must equal the 64-dim width
-    (``DEFAULT_DIMS``).
+    (``DEFAULT_DIMS``), and the corpus must be exactly 64-dim: the check
+    reads the parameters, not the vectors.
 
     Measured at sf0.1 (M=16, d=4, mod=4, 1 iter): compressed-only
     recall@5 0.75; re-ranked at K=256/R=40 → 0.98, K=128/R=60 → 0.99
@@ -801,7 +888,9 @@ def ann_topk_pq(
     bq = _resolve_query_broadcast(queries, n_queries)
     # persisted: seeds, train, encode and the re-rank all read it
     c = tracked_persist(_corpus_frame(corpus, id_col, vec_col))
-    cb, codes = _pq_codec(c, n_subspaces, sub_dims, seed_mod, train_iters, max_codes)
+    cb, codes = _pq_codec(
+        c, n_subspaces, sub_dims, seed_mod, train_iters, max_codes
+    )
     q = _query_frame(queries, id_col, vec_col)
     scored = _adc_scan(q, cb, codes, n_subspaces, sub_dims, bq)
     return _exact_rerank(scored, "approx_cosine", rerank, q, c, k)
@@ -839,10 +928,19 @@ def synth_clustered_embeddings(
 
 
 def _ivfpq_build(
-    corpus: DataFrame, n_centroids_mod: int, max_lists: int | None,
-    ivf_train_iters: int, n_subspaces: int, sub_dims: int, seed_mod: int,
-    pq_train_iters: int, max_codes: int | None, id_col: str, vec_col: str,
-    n_lists: int | None = None, persist_codes: bool = False,
+    corpus: DataFrame,
+    n_centroids_mod: int,
+    max_lists: int | None,
+    ivf_train_iters: int,
+    n_subspaces: int,
+    sub_dims: int,
+    seed_mod: int,
+    pq_train_iters: int,
+    max_codes: int | None,
+    id_col: str,
+    vec_col: str,
+    n_lists: int | None = None,
+    persist_codes: bool = False,
     train_sample: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """IVF-PQ index build → (c, cents, cb, codes): the persisted quantized
@@ -856,7 +954,9 @@ def _ivfpq_build(
         c, "nid", n_centroids_mod, max_lists, ivf_train_iters, n_lists, train_sample
     )
     assign = ivf_assign(c, cents, "nid", "qv").select("nid", "centroid_id")
-    cb, codes = _pq_codec(c, n_subspaces, sub_dims, seed_mod, pq_train_iters, max_codes)
+    cb, codes = _pq_codec(
+        c, n_subspaces, sub_dims, seed_mod, pq_train_iters, max_codes
+    )
     codes = codes.join(assign, "nid")
     return c, cents, cb, tracked_persist(codes) if persist_codes else codes
 
@@ -882,9 +982,19 @@ def _resolve_query_broadcast(queries: DataFrame, n_queries: int | None):
 
 
 def _ivfpq_search(
-    c: DataFrame, cents: DataFrame, cb: DataFrame, codes: DataFrame,
-    queries: DataFrame, k: int, n_probe: int, n_subspaces: int, sub_dims: int,
-    rerank: int, id_col: str, vec_col: str, n_queries: int | None = None,
+    c: DataFrame,
+    cents: DataFrame,
+    cb: DataFrame,
+    codes: DataFrame,
+    queries: DataFrame,
+    k: int,
+    n_probe: int,
+    n_subspaces: int,
+    sub_dims: int,
+    rerank: int,
+    id_col: str,
+    vec_col: str,
+    n_queries: int | None = None,
 ) -> DataFrame:
     """IVF-PQ search over a built index: probe routing → ADC scan of the
     probed lists → exact re-rank, with the |Q|-sized frames broadcast
@@ -921,7 +1031,9 @@ def ann_topk_ivfpq(
     codes): the IVF router sends each query to its ``n_probe`` nearest
     lists, the ADC scan runs ONLY over the probed lists' codes, and the
     top-``rerank`` shortlist is re-ranked exactly.
-    ``n_subspaces · sub_dims`` must equal ``dims``.
+    ``n_subspaces · sub_dims`` must equal ``dims``, and the corpus must
+    be exactly ``dims`` wide: the check reads the parameters, not the
+    vectors.
 
     The flat PQ scan's per-query work is linear in codes, so a query
     batch growing with the corpus makes |Q|·N quadratic (measured n^1.97,
@@ -937,13 +1049,31 @@ def ann_topk_ivfpq(
     (query, neighbor) partial-sum exchange of probed candidates."""
     _check_pq_width(n_subspaces, sub_dims, dims)
     index = _ivfpq_build(
-        corpus, n_centroids_mod, max_lists, ivf_train_iters, n_subspaces,
-        sub_dims, seed_mod, pq_train_iters, max_codes, id_col, vec_col,
-        n_lists=n_lists, train_sample=train_sample,
+        corpus,
+        n_centroids_mod,
+        max_lists,
+        ivf_train_iters,
+        n_subspaces,
+        sub_dims,
+        seed_mod,
+        pq_train_iters,
+        max_codes,
+        id_col,
+        vec_col,
+        n_lists=n_lists,
+        train_sample=train_sample,
     )
     return _ivfpq_search(
-        *index, queries, k, n_probe, n_subspaces, sub_dims, rerank, id_col,
-        vec_col, n_queries=n_queries,
+        *index,
+        queries,
+        k,
+        n_probe,
+        n_subspaces,
+        sub_dims,
+        rerank,
+        id_col,
+        vec_col,
+        n_queries=n_queries,
     )
 
 
@@ -980,14 +1110,26 @@ def ann_ivfpq_probe_curve(
     pair's probe rank, each candidate fans out to the settings whose
     cutoff admits it, and the shortlist and re-rank are keyed by (setting,
     query) — bit-identical to one ``ann_topk_ivfpq`` search per setting,
-    which the oracle replays."""
+    which the oracle replays. The PQ width contract is
+    ``ann_topk_ivfpq``'s."""
     if not probe_settings:
         raise ValueError("probe_settings must be non-empty")
     _check_pq_width(n_subspaces, sub_dims, dims)
     c, cents, cb, codes = _ivfpq_build(
-        corpus, n_centroids_mod, max_lists, ivf_train_iters, n_subspaces,
-        sub_dims, seed_mod, pq_train_iters, max_codes, id_col, vec_col,
-        n_lists=n_lists, persist_codes=True, train_sample=train_sample,
+        corpus,
+        n_centroids_mod,
+        max_lists,
+        ivf_train_iters,
+        n_subspaces,
+        sub_dims,
+        seed_mod,
+        pq_train_iters,
+        max_codes,
+        id_col,
+        vec_col,
+        n_lists=n_lists,
+        persist_codes=True,
+        train_sample=train_sample,
     )
     distinct_ps = sorted({int(p) for p in probe_settings})
     parr = "array({})".format(",".join(str(p) for p in distinct_ps))
@@ -996,8 +1138,12 @@ def ann_ivfpq_probe_curve(
     probes = _probe_routes(q, cents, distinct_ps[-1]).select(
         "query_id", "centroid_id", "_rn"
     )
-    scored = _adc_scan(q, cb, codes, n_subspaces, sub_dims, bq, probes)
-    cand = scored.selectExpr("*", f"explode(filter({parr}, p -> p >= _minrn)) AS _probe")
+    scored = _adc_scan(
+        q, cb, codes, n_subspaces, sub_dims, bq, probes, probe_rank=True
+    )
+    cand = scored.selectExpr(
+        "*", f"explode(filter({parr}, p -> p >= _minrn)) AS _probe"
+    )
     approx_topk = _exact_rerank(
         cand, "approx_cosine", rerank, q, c, k, keys=("_probe", "query_id"), bq=bq
     ).select("_probe", "query_id", "neighbor_id")
@@ -1031,8 +1177,12 @@ def ann_ivfpq_probe_curve(
             ",".join(str(int(p)) for p in probe_settings)
         )
     )
-    return wanted.join(F.broadcast(curve), F.col("probe_lists") == F.col("_probe")).select(
-        F.col("probe_lists").cast("long").alias("probe_lists"), "n_queries", "avg_recall"
+    return wanted.join(
+        F.broadcast(curve), F.col("probe_lists") == F.col("_probe")
+    ).select(
+        F.col("probe_lists").cast("long").alias("probe_lists"),
+        "n_queries",
+        "avg_recall",
     )
 
 
@@ -1103,8 +1253,9 @@ def _sq8_codec(
     cols = ["nid"]
     if assign is not None:
         c, cols = c.join(assign, "nid"), ["nid", "centroid_id"]
-    c8 = c.crossJoin(scales).selectExpr(*cols, f"{_sq8_encode_sql('qv', 'sl')} AS c8")
-    q8 = q.crossJoin(scales).selectExpr("query_id", f"{_sq8_encode_sql('qv', 'sl')} AS q8")
+    code = _sq8_encode_sql("qv", "sl")
+    c8 = c.crossJoin(scales).selectExpr(*cols, f"{code} AS c8")
+    q8 = q.crossJoin(scales).selectExpr("query_id", f"{code} AS q8")
     return _with_norm(c8, "c8", "cn8"), _with_norm(q8, "q8", "qn8")
 
 
@@ -1209,13 +1360,14 @@ def ann_topk_hamming(
     neighbor_id."""
     lo, hi = _sign_signature_sql("qv", 0), _sign_signature_sql("qv", 32)
     c = tracked_persist(
-        _corpus_frame(corpus, id_col, vec_col).selectExpr("*", f"{lo} AS lo", f"{hi} AS hi")
+        _corpus_frame(corpus, id_col, vec_col).selectExpr(
+            "*", f"{lo} AS lo", f"{hi} AS hi"
+        )
     )
     q = _query_frame(queries, id_col, vec_col)
     qs = q.selectExpr("query_id", f"{lo} AS qlo", f"{hi} AS qhi")
-    scored = _scan(
-        c, qs, "CAST(bit_count(lo ^ qlo) + bit_count(hi ^ qhi) AS BIGINT) AS hamming", "nid"
-    )
+    hamming = "CAST(bit_count(lo ^ qlo) + bit_count(hi ^ qhi) AS BIGINT) AS hamming"
+    scored = _scan(c, qs, hamming, "nid")
     return _exact_rerank(scored, "hamming", rerank, q, c, k, descending=False)
 
 
@@ -1248,7 +1400,9 @@ def ann_filtered_prepost(
     filtering it is the same row set); the post-filter re-rank is a
     bounded window over ≤ |Q|·overfetch rows."""
     c = tracked_persist(
-        _with_norm(_corpus_frame(corpus, id_col, vec_col, "neighbor_id", "cv"), "cv", "cn")
+        _with_norm(
+            _corpus_frame(corpus, id_col, vec_col, "neighbor_id", "cv"), "cv", "cn"
+        )
     )
     q = _query_frame(queries, id_col, vec_col)
     pre = _exact_topk(c.where(predicate("neighbor_id")), q, k)
@@ -1258,7 +1412,12 @@ def ann_filtered_prepost(
         full.where(predicate("neighbor_id"))
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("_rn").cast("long").alias("rank"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            "cosine",
+            F.col("_rn").cast("long").alias("rank"),
+        )
     )
     return pre, post
 
@@ -1293,9 +1452,12 @@ def mmr_diversified_topk(
     (which unrolls the ``k`` greedy steps as CTEs)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    c = tracked_persist(_with_norm(_corpus_frame(corpus, id_col, vec_col), "qv", "n"))
+    c = tracked_persist(
+        _with_norm(_corpus_frame(corpus, id_col, vec_col), "qv", "n")
+    )
     q = _query_frame(queries, id_col, vec_col, "q_qv", "q_n")
-    scored = _scan(c, q, f"{_cfn_sql('q_qv', 'qv', 'q_n', 'n')} AS relevance", "nid")
+    relevance = f"{_cfn_sql('q_qv', 'qv', 'q_n', 'n')} AS relevance"
+    scored = _scan(c, q, relevance, "nid")
     # exact top-`shortlist` relevance candidates per query (salted top-k
     # keeps the order column, so the |Q|·N scored frame is scanned once),
     # re-joined with their vectors for the pairwise diversity penalty —
@@ -1413,8 +1575,8 @@ def pca_power_iteration(
         F.col(vec_col), lambda x: F.floor(x.cast("double") * F.lit(quant)).cast("long")
     )
     q = corpus.select(xq.alias("xq"))
-    pairs_dim = local_frame(spark,
-        [(i, j) for i in range(dims) for j in range(i, dims)], "i int, j int"
+    pairs_dim = local_frame(
+        spark, [(i, j) for i in range(dims) for j in range(i, dims)], "i int, j int"
     )
     g = (
         q.crossJoin(F.broadcast(pairs_dim))
@@ -1468,7 +1630,8 @@ def pca_power_iteration(
     vden = sum(x * x for x in v)
     rayleigh = float(vnum) / float(vden) if vden != 0 else None
     spark2 = corpus.sparkSession
-    return local_frame(spark2,
+    return local_frame(
+        spark2,
         [(int(d), int(v[d]), rayleigh) for d in range(dims)],
         "dim long, component long, rayleigh double",
     )
