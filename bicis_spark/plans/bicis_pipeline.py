@@ -12,18 +12,14 @@ from one labeled pass instead of three re-filters.
 
 from __future__ import annotations
 
+from pyspark.ml.feature import VectorAssembler
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bicis_spark.operators.dataset import assemble_dataset, fails_report
 from bicis_spark.operators.features import circular_lag_features
-from bicis_spark.operators.model import (
-    assemble_features,
-    evaluate_mse,
-    fit_poisson,
-    predict,
-)
-from bicis_spark.operators.profiles import station_profile
+from bicis_spark.operators.model import fit_poisson
+from bicis_spark.operators.profiles import event_profile_single_scan
 from bicis_spark.operators.split import SplitPeriods, split_bounds, with_split_label
 from bicis_spark.operators.targets import next_window_count_bucketed
 from bicis_spark.plans.runner import Pipeline
@@ -66,11 +62,11 @@ def build_pipeline(
     @p.stage("profile", deps=["split"])
     def profile(s: SparkSession, labeled: DataFrame) -> DataFrame:
         train = labeled.where(F.col("split") == "training")
-        rents = train.where(F.col("mode") == "rent")
-        returns = train.where(F.col("mode") == "return")
-        n_rents = station_profile(rents, "station", "ts", "hour", "n_rents")
-        n_returns = station_profile(returns, "station", "ts", "hour", "n_returns")
-        return n_rents.join(n_returns, ["station", "hour"], "inner")
+        return event_profile_single_scan(
+            train, "station", "ts", "hour",
+            is_rent=F.col("mode") == "rent",
+            is_return=F.col("mode") == "return",
+        )
 
     @p.stage("target", deps=["split"])
     def target(s: SparkSession, labeled: DataFrame) -> DataFrame:
@@ -97,14 +93,18 @@ def build_pipeline(
     @p.stage("predictions", deps=["dataset"])
     def predictions(s: SparkSession, ds: DataFrame) -> DataFrame:
         feature_cols = [c for c in ds.columns if c not in ("id", "target", "split")]
-        assembled = assemble_features(
-            ds, feature_cols=feature_cols
-        ).join(ds.select("id", "split"), "id")
+        # assemble_features' [id, label, features] with the split label
+        # carried alongside, so no join on id is needed to get it back
+        assembled = VectorAssembler(
+            inputCols=feature_cols, outputCol="features"
+        ).transform(ds).select(
+            "id", F.col("target").cast("double").alias("label"), "features", "split"
+        )
         # fit ONLY on training (interface.py:40-45 / M4); predict all splits
         model = fit_poisson(
             assembled.where(F.col("split") == "training"), link="log", max_iter=1
         )
-        return predict(model, assembled).join(ds.select("id", "split"), "id")
+        return model.transform(assembled).select("id", "label", "prediction", "split")
 
     @p.stage("evaluation", deps=["predictions"])
     def evaluation(s: SparkSession, preds: DataFrame) -> DataFrame:

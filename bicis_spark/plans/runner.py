@@ -10,9 +10,12 @@ thin YAML experiment config — without the scheduler daemon, process
 boundaries, or ``$name``-reference object graph.
 
 Scale notes: stages exchange parquet (columnar, splittable, statistics for
-pruning); a stage's ``partition_by`` feeds partition pruning downstream;
-memoization uses an atomic ``_SUCCESS``-style marker so concurrent runners
-never read partial outputs.
+pruning); memoization uses an atomic ``_SUCCESS``-style marker so
+concurrent runners never read partial outputs. Memoization also covers the
+in-process handle: a ``Pipeline`` reads each materialized stage at most
+once and never infers the schema of a frame it just wrote. Schema
+inference costs one Spark job per read, and on small stages that fixed
+cost outweighs the work that moves data.
 """
 
 from __future__ import annotations
@@ -43,7 +46,6 @@ class Stage:
     name: str
     fn: Callable[..., DataFrame]
     deps: list[str] = field(default_factory=list)
-    partition_by: list[str] | None = None
     metrics: dict[str, object] | None = None
 
 
@@ -53,12 +55,21 @@ class Pipeline:
     ``run`` topologically executes stages; each stage's output is
     materialized at ``{root}/{name}.parquet`` and skipped when already
     present (the reference's L2 incremental materialization).
+
+    The frame a stage hands downstream is its parquet read-back, kept on
+    the object: after a write it is read with the schema just written (no
+    inference job); a memoized stage is read once, by inference, on first
+    use. Later ``run`` calls reuse the kept frame, and a forced re-write
+    replaces it. A kept frame does not see outputs rewritten by another
+    runner on the same root.
     """
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         self.stages: dict[str, Stage] = {}
+        #: per-stage parquet read-back, reused across ``run`` calls
+        self._outputs: dict[str, DataFrame] = {}
         #: per-stage observed metrics from the LAST ``run`` call:
         #: {stage: {"rows": n, ...}} for executed stages,
         #: {stage: {"skipped": True}} for memoized ones.
@@ -68,11 +79,10 @@ class Pipeline:
         self,
         name: str,
         deps: list[str] | None = None,
-        partition_by: list[str] | None = None,
         metrics: dict[str, object] | None = None,
     ):
         def deco(fn: Callable[..., DataFrame]):
-            self.stages[name] = Stage(name, fn, deps or [], partition_by, metrics)
+            self.stages[name] = Stage(name, fn, deps or [], metrics)
             return fn
 
         return deco
@@ -88,13 +98,12 @@ class Pipeline:
         from pyspark.sql import functions as F
 
         order = self._topo_order(targets)
-        results: dict[str, DataFrame] = {}
         self.last_run_metrics = {}
         for name in order:
             stage = self.stages[name]
             path = self._path(name)
             if force or not self._done(name):
-                inputs = [results[d] for d in stage.deps]
+                inputs = [self._outputs[d] for d in stage.deps]
                 df = stage.fn(self.spark, *inputs)
                 # observed metrics ride the write job — no second scan
                 obs = Observation(f"stage:{name}")
@@ -110,15 +119,14 @@ class Pipeline:
                         )
                     aggs[mname] = col.alias(mname)
                 df = df.observe(obs, *aggs.values())
-                writer = df.write.mode("overwrite")
-                if stage.partition_by:
-                    writer = writer.partitionBy(*stage.partition_by)
-                writer.parquet(path)
+                df.write.mode("overwrite").parquet(path)
                 self.last_run_metrics[name] = dict(obs.get)
+                self._outputs[name] = self.spark.read.schema(df.schema).parquet(path)
             else:
                 self.last_run_metrics[name] = {"skipped": True}
-            results[name] = self.spark.read.parquet(path)
-        return results
+                if name not in self._outputs:
+                    self._outputs[name] = self.spark.read.parquet(path)
+        return {name: self._outputs[name] for name in order}
 
     def _topo_order(self, targets: list[str] | None) -> list[str]:
         wanted = targets or list(self.stages)

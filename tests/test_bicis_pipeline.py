@@ -10,7 +10,15 @@ from bicis_spark.plans.runner import load_experiment
 
 
 def test_full_pipeline(spark, sf_dir, tmp_path):
-    results = run_full_pipeline(spark, sf_dir, str(tmp_path / "pipe"))
+    root = tmp_path / "pipe"
+    results = run_full_pipeline(spark, sf_dir, str(root))
+
+    # the runner reads each stage back with the schema it wrote instead of
+    # inferring it: that must be exactly what inference gives, field
+    # nullability and metadata included
+    for name, df in results.items():
+        inferred = spark.read.parquet(str(root / f"{name}.parquet")).schema
+        assert df.schema == inferred, name
 
     ds = results["dataset"]
     assert len(ds.columns) == 3 + 48  # id, target, split, 24+24 lag features

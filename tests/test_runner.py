@@ -133,11 +133,74 @@ def test_validate_disjoint_outputs(spark):
         validate_disjoint_outputs({"a": a, "c": c}, ["id"])
 
 
+def _new_jobs(spark, action) -> set[int]:
+    """Ids of the Spark jobs ``action()`` runs.
+
+    Compares ID sets, not counts: the tracker retains only the last
+    spark.ui.retainedJobs (1000) job ids, so deep into a full-suite
+    session old ids are evicted WHILE the action runs and a before/after
+    count delta undercounts. Eviction only drops old ids, so the set
+    difference still isolates exactly the new jobs."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    action()
+    return set(tracker.getJobIdsForGroup(None) or []) - before
+
+
+def test_pipeline_reuses_kept_stage_frames(spark, tmp_path):
+    """A stage materialized by an earlier ``run`` on the same Pipeline is
+    handed downstream from the kept read-back: running the dependent stage
+    launches exactly one job, its write (no re-read, no schema
+    inference)."""
+    p = Pipeline(spark, str(tmp_path))
+
+    @p.stage("base")
+    def base(s):
+        return s.range(10).select(F.col("id"))
+
+    @p.stage("doubled", deps=["base"])
+    def doubled(s, base_df):
+        return base_df.select((F.col("id") * 2).alias("v"))
+
+    p.run(["base"])
+    new_jobs = _new_jobs(spark, lambda: p.run(["doubled"]))
+    assert p.last_run_metrics == {"base": {"skipped": True}, "doubled": {"rows": 10}}
+    assert len(new_jobs) == 1
+
+
+def test_pipeline_forced_rewrite_replaces_kept_frame(spark, tmp_path):
+    """``force=True`` re-runs a stage whose output changed: the frame
+    returned (and handed downstream) holds the new rows, not the kept
+    read-back of the old ones."""
+    n_rows = {"n": 5}
+    p = Pipeline(spark, str(tmp_path))
+
+    @p.stage("base")
+    def base(s):
+        return s.range(n_rows["n"]).select(F.col("id"))
+
+    @p.stage("total", deps=["base"])
+    def total(s, base_df):
+        return base_df.agg(F.sum("id").alias("t"))
+
+    r1 = p.run(["total"])
+    assert sorted(x["id"] for x in r1["base"].collect()) == list(range(5))
+    assert r1["total"].first()["t"] == 10
+
+    n_rows["n"] = 8
+    r2 = p.run(["total"], force=True)
+    assert sorted(x["id"] for x in r2["base"].collect()) == list(range(8))
+    assert r2["total"].first()["t"] == 28
+    # a later memoized run hands out the rewritten frames
+    r3 = p.run(["total"])
+    assert r3["total"].first()["t"] == 28
+
+
 def test_pipeline_observed_metrics_ride_the_write_job(spark, tmp_path):
     """Per-stage metrics come from DataFrame.observe attached to the
     materialization write — row counts plus caller aggregates, with no
     second scan (the job-count assertion: exactly one job per executed
-    stage beyond the memoized read). Memoized stages report skipped."""
+    stage). Memoized stages report skipped."""
     p = Pipeline(spark, str(tmp_path))
 
     @p.stage("base")
@@ -152,22 +215,14 @@ def test_pipeline_observed_metrics_ride_the_write_job(spark, tmp_path):
     def filtered(s, base_df):
         return base_df.where(F.col("id") >= 5)
 
-    tracker = spark.sparkContext.statusTracker()
-    # Compare ID sets, not counts: the tracker retains only the last
-    # spark.ui.retainedJobs (1000) job ids, so deep into a full-suite
-    # session old ids are evicted WHILE the stage runs and a
-    # before/after count delta undercounts. Eviction only drops old
-    # ids, so the set difference still isolates exactly the new jobs.
-    jobs_before = set(tracker.getJobIdsForGroup(None) or [])
-    p.run(["filtered"])
-    new_jobs = set(tracker.getJobIdsForGroup(None) or []) - jobs_before
+    new_jobs = _new_jobs(spark, lambda: p.run(["filtered"]))
 
     assert p.last_run_metrics["base"] == {"rows": 25}
     assert p.last_run_metrics["filtered"] == {"rows": 20, "n_even": 10}
-    # two jobs per stage (the parquet write + the post-write read's
-    # file-listing/schema job) and ZERO metric jobs — a count()-based
-    # metrics pass would add one more job per stage (6 total)
-    assert len(new_jobs) == 4
+    # one job per stage (the parquet write; the read-back takes the
+    # written schema, so no inference job) and ZERO metric jobs — a
+    # count()-based metrics pass would add one more job per stage
+    assert len(new_jobs) == 2
 
     p.run(["filtered"])  # memoized rerun
     assert p.last_run_metrics == {
